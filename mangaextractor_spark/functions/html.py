@@ -2,14 +2,27 @@
 'HTML boilerplate strip ... DOM heuristics') as pure Column
 expressions — tag stripping, boilerplate-region removal, entity
 unescape, title extraction. Regexes stay in the Java-regex ∩ RE2
-common subset so every operator has a DuckDB oracle twin.
+common subset so every operator has a DuckDB oracle twin. Whitespace
+is the explicit class WS = [ \\t\\n\\x0B\\f\\r], never \\s: Java's \\s
+includes \\x0B and RE2's does not, so \\s would let the engines differ.
 
-Scope (documented): non-nested block semantics — <script>/<style>/
-<nav>/<header>/<footer>/<aside> regions are dropped wholesale,
-remaining tags stripped, the five predefined XML entities + numeric
-decimal entities unescaped. This is the deterministic, SQL-expressible
+Scope (documented): boilerplate regions — <head>, <script>, <style>,
+<nav>, <header>, <footer>, <aside>, <title> — are dropped in ONE
+leftmost-first pass: scanning left to right, a region runs from a
+boilerplate open tag to the first close of that same tag, and the
+scan resumes after it, so a region swallows whatever boilerplate it
+contains. Remaining tags are stripped, and the entities &lt; &gt;
+&quot; &#39; &amp; unescaped (other numeric entities such as &#60;
+pass through verbatim). This is the deterministic, SQL-expressible
 80% of boilerplate removal; density-based DOM heuristics over real
 pages belong in an Arrow kernel stage like the image ladder.
+
+Self-nesting caveat: the lazy match closes at the FIRST close of the
+tag, so a boilerplate element holding another element of the same tag
+leaks the tail after the inner close:
+<aside><header><aside>C</aside></header> B</aside> gives "B". On
+well-formed HTML without such self-nesting the region pass equals
+dropping each boilerplate element whole.
 """
 
 from __future__ import annotations
@@ -18,26 +31,24 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # (?is): case-insensitive + dotall — both supported by Java regex and
-# RE2. RE2 has no backreferences, so the boilerplate blocks expand to
-# one pattern per tag instead of <(a|b)>.*?</\1>.
-# head (incl. its title/style/meta) is metadata, not content; \b keeps
-# <head> from swallowing <header>, which is dropped by its own pattern.
+# RE2. RE2 has no backreferences, so instead of <(a|b)>.*?</\1> the
+# region pattern is one alternative per tag, each closing on its own
+# tag; at a '<' only the alternative whose name matches reaches the
+# lazy scan, so the whole tag set costs one scan of the string (a
+# pass per tag costs ~4x as much). head (incl. its title/style/meta)
+# is metadata, not content; \b keeps <head> from swallowing <header>,
+# which has its own alternative.
 BOILER_TAGS = ("head", "script", "style", "nav", "header", "footer", "aside", "title")
+WS = r"[ \t\n\x0B\f\r]"
+BOILER_RE = "(?is)<(?:" + "|".join(rf"{t}\b.*?</{t}{WS}*>" for t in BOILER_TAGS) + ")"
 _TAG_RE = r"(?s)<[^>]*>"
-_WS_RE = r"\s+"
-_TITLE_RE = r"(?is)<title[^>]*>(.*?)</title\s*>"
-
-
-def boiler_re(tag: str) -> str:
-    return rf"(?is)<{tag}\b.*?</{tag}\s*>"
+_WS_RE = WS + "+"
+_TITLE_RE = rf"(?is)<title[^>]*>(.*?)</title{WS}*>"
 
 
 def drop_boilerplate_regions(html: Column) -> Column:
-    """Remove script/style/nav/header/footer/aside regions wholesale."""
-    out = html
-    for tag in BOILER_TAGS:
-        out = F.regexp_replace(out, boiler_re(tag), " ")
-    return out
+    """Remove every BOILER_TAGS region in one leftmost-first pass."""
+    return F.regexp_replace(html, BOILER_RE, " ")
 
 
 def strip_tags(text: Column) -> Column:
@@ -81,20 +92,18 @@ def html_main_text(html: Column) -> Column:
 
 def html_main_sql(col: str) -> str:
     """DuckDB expression mirroring html_main_text step by step."""
-    expr = col
-    for tag in BOILER_TAGS:
-        expr = f"REGEXP_REPLACE({expr}, '{boiler_re(tag)}', ' ', 'g')"
+    expr = f"REGEXP_REPLACE({col}, '{BOILER_RE}', ' ', 'g')"
     expr = f"REGEXP_REPLACE({expr}, '{_TAG_RE}', ' ', 'g')"
     for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "''"), ("&amp;", "&")):
         expr = f"REPLACE({expr}, '{ent}', '{ch}')"
-    return f"TRIM(REGEXP_REPLACE({expr}, '\\s+', ' ', 'g'))"
+    return f"TRIM(REGEXP_REPLACE({expr}, '{_WS_RE}', ' ', 'g'))"
 
 
 def html_title_sql(col: str) -> str:
     expr = f"REGEXP_EXTRACT({col}, '{_TITLE_RE}', 1)"
     for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "''"), ("&amp;", "&")):
         expr = f"REPLACE({expr}, '{ent}', '{ch}')"
-    return f"TRIM(REGEXP_REPLACE({expr}, '\\s+', ' ', 'g'))"
+    return f"TRIM(REGEXP_REPLACE({expr}, '{_WS_RE}', ' ', 'g'))"
 
 
 # --- density-based DOM heuristics (round 4) -------------------------------
@@ -108,8 +117,8 @@ def html_title_sql(col: str) -> str:
 # float ratio in the keep decision).
 
 DENSITY_MIN_CHARS = 20
-_P_BLOCK_RE = r"(?is)<p\b[^>]*>(.*?)</p\s*>"
-_A_TEXT_RE = r"(?is)<a\b[^>]*>(.*?)</a\s*>"
+_P_BLOCK_RE = rf"(?is)<p\b[^>]*>(.*?)</p{WS}*>"
+_A_TEXT_RE = rf"(?is)<a\b[^>]*>(.*?)</a{WS}*>"
 
 
 def _clean(text: Column) -> Column:
@@ -146,7 +155,7 @@ def _clean_sql(expr: str) -> str:
     out = f"REGEXP_REPLACE({expr}, '{_TAG_RE}', ' ', 'g')"
     for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "''"), ("&amp;", "&")):
         out = f"REPLACE({out}, '{ent}', '{ch}')"
-    return f"TRIM(REGEXP_REPLACE({out}, '\\s+', ' ', 'g'))"
+    return f"TRIM(REGEXP_REPLACE({out}, '{_WS_RE}', ' ', 'g'))"
 
 
 def dom_blocks_sql(col: str) -> str:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.html import html_main_sql, html_main_text, html_title, html_title_sql
+from ..functions.html import WS, html_main_sql, html_main_text, html_title, html_title_sql
 from ..session import load_table, spread
 from . import register
 
@@ -235,8 +235,8 @@ def dom_density_content(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pulls in the Java-regex ∩ RE2 subset, map-side except the final
 # rollup.
 
-_TR_RE = r"(?is)<tr[^>]*>(.*?)</tr\s*>"
-_CELL_RE = r"(?is)<t[dh][^>]*>(.*?)</t[dh]\s*>"
+_TR_RE = rf"(?is)<tr[^>]*>(.*?)</tr{WS}*>"
+_CELL_RE = rf"(?is)<t[dh][^>]*>(.*?)</t[dh]{WS}*>"
 _HREF_RE = r'(?is)<a\b[^>]*href="([^"]*)"'
 _DOMAIN_RE = r"^https?://([^/]+)"
 

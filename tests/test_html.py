@@ -2,10 +2,21 @@
 
 from __future__ import annotations
 
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from mangaextractor_spark.functions.html import html_main_text, html_title
+from mangaextractor_spark.functions.html import (
+    BOILER_RE,
+    BOILER_TAGS,
+    WS,
+    html_main_sql,
+    html_main_text,
+    html_title,
+    html_title_sql,
+)
 
 CASES = [
     # boilerplate regions vanish wholesale, case-insensitively
@@ -34,6 +45,17 @@ CASES = [
         "",
         "big bold idea",
     ),
+    # self-nesting through another boilerplate tag: the region closes at
+    # the FIRST </aside>, so the outer tail leaks (a per-tag chain that
+    # dropped <header> first gave "" here; both misread the tree)
+    ("<aside><header><aside>C</aside></header> B</aside>", "", "B"),
+    ("<NAV><script><nav>x</nav></script> y</NAV> z", "", "y z"),
+    # direct self-nesting leaks the same way on every form
+    ("<aside><aside>C</aside> B</aside>", "", "B"),
+    # \x0B is whitespace on both engines (Java's \s has it, RE2's not)
+    ("<title>t\x0bu</title><p>a\x0bb\t c</p>", "t u", "a b c"),
+    # numeric entities other than &#39; pass through verbatim
+    ("<p>&#60;b&#62; &#39;q&#39;</p>", "", "&#60;b&#62; 'q'"),
 ]
 
 
@@ -47,6 +69,161 @@ def test_html_operators(spark):
     got = {r.html: (r.t, r.m) for r in rows}
     for html, t, m in CASES:
         assert got[html] == (t, m), html
+
+
+def test_main_text_is_three_regex_passes(spark):
+    """Boilerplate, tags, whitespace: one regexp_replace each. A pass
+    per boilerplate tag made the chain ~4x slower on its hot path."""
+    expr = str(html_main_text(F.col("h")))
+    assert expr.count("regexp_replace(") == 3, expr
+
+
+# --- fused region pass vs the per-tag chain it replaced -------------------
+# Pure-Python `re` model of the chain. The per-tag reference lives only
+# here: it is the old definition, one pass per tag in BOILER_TAGS order.
+
+_PER_TAG = [re.compile(rf"(?is)<{t}\b.*?</{t}{WS}*>") for t in BOILER_TAGS]
+_FUSED = re.compile(BOILER_RE)
+_TAG = re.compile(r"(?s)<[^>]*>")
+_WS_RUN = re.compile(WS + "+")
+_ENTITIES = (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&"))
+
+
+def _finish(h: str) -> str:
+    h = _TAG.sub(" ", h)
+    for ent, ch in _ENTITIES:
+        h = h.replace(ent, ch)
+    return _WS_RUN.sub(" ", h).strip(" ")
+
+
+def _per_tag_main(h: str) -> str:
+    for rx in _PER_TAG:
+        h = rx.sub(" ", h)
+    return _finish(h)
+
+
+def _fused_main(h: str) -> str:
+    return _finish(_FUSED.sub(" ", h))
+
+
+# Content tags include names that share a prefix with a boilerplate tag;
+# \b must keep them apart.
+_CONTENT_TAGS = ("p", "div", "article", "b", "span", "headline", "navbar", "titles", "main")
+_WORDS = ("alpha", "beta", "x<y", "1 < 2", "a > b", "&amp;", "&lt;b&gt;", "&quot;q&quot;",
+          "&#39;", "&#60;", "&amp;lt;", "caf\u00e9", "\u65e5\u672c")
+_SPACES = (" ", "  ", "\n", "\t", "\x0b", "\f", "\r\n")
+_CLOSE_WS = ("", "", "", " ", "\n", "\t ")
+
+
+def _case(rng: random.Random, name: str) -> str:
+    return rng.choice((name, name.upper(), name.capitalize()))
+
+
+def _open(rng: random.Random, name: str) -> str:
+    attrs = rng.choice(("", ' class="c"', " id=x", ' data-v="a b"', "\n  role=nav"))
+    return f"<{_case(rng, name)}{attrs}>"
+
+
+def _close(rng: random.Random, name: str) -> str:
+    return f"</{_case(rng, name)}{rng.choice(_CLOSE_WS)}>"
+
+
+def _tree(rng: random.Random, depth: int, above: frozenset) -> str:
+    """A well-formed fragment; no boilerplate tag inside itself."""
+    parts = []
+    for _ in range(rng.randint(1, 4)):
+        r = rng.random()
+        if depth == 0 or r < 0.4:
+            parts.append(rng.choice(_WORDS) + rng.choice(_SPACES))
+            continue
+        free = [t for t in BOILER_TAGS if t not in above]
+        if r < 0.7 and free:
+            t = rng.choice(free)
+            inner = _tree(rng, depth - 1, above | {t})
+        else:
+            t = rng.choice(_CONTENT_TAGS)
+            inner = _tree(rng, depth - 1, above)
+        parts.append(_open(rng, t) + inner + _close(rng, t))
+    return "".join(parts)
+
+
+def test_fused_region_pass_matches_per_tag_chain():
+    rng = random.Random(20260417)
+    nested = 0
+    for _ in range(100_000):
+        h = _tree(rng, rng.randint(1, 4), frozenset())
+        assert _fused_main(h) == _per_tag_main(h), h
+        nested += any(_FUSED.search(h, m.start() + 1, m.end()) for m in _FUSED.finditer(h))
+    # the generator really nests boilerplate inside boilerplate
+    assert nested > 10_000, nested
+
+
+def test_fused_model_matches_spark(spark):
+    """The Python model above IS the Spark expression, on fuzz trees."""
+    rng = random.Random(7)
+    rows = [(_tree(rng, rng.randint(1, 4), frozenset()),) for _ in range(2_000)]
+    got = (
+        spark.createDataFrame(rows, "h string")
+        .select("h", html_main_text(F.col("h")).alias("m"))
+        .collect()
+    )
+    for r in got:
+        assert r.m == _fused_main(r.h), r.h
+
+
+# --- Spark vs DuckDB on tag soup ------------------------------------------
+
+_SOUP_TOKENS = (
+    "text", " ", "\t", "\x0b", "\n", "\r", "\f", "  ", "&amp;", "&lt;", "&gt;", "&quot;",
+    "&#39;", "&#60;", "&amp;lt;", "x<y", "a > b", "caf\u00e9", "\u65e5\u672c", "<br/>",
+    "<!-- c -->",
+)
+
+
+def _soup(rng: random.Random) -> str:
+    """Unbalanced, crossing and self-nested open/close tags mixed with
+    text: no well-formedness at all."""
+    out = []
+    for _ in range(rng.randint(0, 24)):
+        r = rng.random()
+        name = rng.choice(BOILER_TAGS + _CONTENT_TAGS)
+        if r < 0.35:
+            out.append(_open(rng, name))
+        elif r < 0.6:
+            close = _close(rng, name)
+            out.append(close[:-1] + "\x0b>" if rng.random() < 0.1 else close)
+        else:
+            out.append(rng.choice(_SOUP_TOKENS))
+    return "".join(out)
+
+
+def test_spark_duckdb_parity_on_tag_soup(spark):
+    import duckdb
+    import pandas as pd
+
+    rng = random.Random(41)
+    pdf = pd.DataFrame({"i": range(20_000), "h": [_soup(rng) for _ in range(20_000)]})
+    sp = (
+        spark.createDataFrame(pdf)
+        .select("i", html_title(F.col("h")).alias("t"), html_main_text(F.col("h")).alias("m"))
+        .toPandas()
+        .sort_values("i", ignore_index=True)
+    )
+    con = duckdb.connect()
+    con.register("soup", pdf)
+    dk = con.execute(
+        f"SELECT i, {html_title_sql('h')} AS t, {html_main_sql('h')} AS m FROM soup ORDER BY i"
+    ).df()
+    con.close()
+    diff = [
+        (h, st, dt, sm, dm)
+        for h, st, dt, sm, dm in zip(pdf.h, sp.t, dk.t, sp.m, dk.m)
+        if (st, sm) != (dt, dm)
+    ]
+    assert not diff, diff[:3]
+    # the soup reaches the \x0B and boilerplate cases it exists for
+    assert sum("\x0b" in h for h in pdf.h) > 1_000
+    assert (pdf.h.str.len() > sp.m.str.len() + 20).sum() > 1_000
 
 
 class TestPdf:
